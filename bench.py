@@ -3,6 +3,7 @@
 Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line
 {"metric", "value", "unit": "sec", "queries": {...}, "sf", ...}.
+$SPARK_GRAFT_CPUS defaults to the CPUs this process may run on.
 
 --scaling: run the KG end-to-end job at two parallelism levels (local[8]
 vs local[32]) on identical synthetic input and report throughput at both
@@ -22,7 +23,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from kgpipe.session import available_cpus, default_cpus  # noqa: E402
+
+CPUS = default_cpus(os.environ, available_cpus())
 CL_OBO = (
     "/root/reference/nlp-pipelines-conceptmapper/src/test/resources/"
     "oboFiles/cl-basic.obo"

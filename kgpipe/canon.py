@@ -20,6 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import schemas
+from .detect import collect_dictionary
+
 
 def connected_components(
     edges: DataFrame,
@@ -150,17 +153,23 @@ def components_from_rows(rows: list[dict]) -> dict[str, str]:
     return _dsu_components(edges)
 
 
-def canonicalize_with_map(mentions: DataFrame, comp_map: dict[str, str]) -> DataFrame:
-    """Attach canonical_id given a precomputed component map (broadcast)."""
-    spark = mentions.sparkSession
-    comp = spark.createDataFrame(
-        list(comp_map.items()) or [], "concept_id string, component string"
-    )
+def _attach_canonical(mentions: DataFrame, comp: DataFrame) -> DataFrame:
     return (
         mentions.join(F.broadcast(comp), "concept_id", "left")
         .withColumn("canonical_id", F.coalesce("component", "concept_id"))
         .drop("component")
     )
+
+
+def canonicalize_with_map(mentions: DataFrame, comp_map: dict[str, str]) -> DataFrame:
+    """Attach canonical_id given a precomputed component map (broadcast as
+    an Arrow-built frame, so no Python worker reads it)."""
+    comp = schemas.local_frame(
+        mentions.sparkSession,
+        [{"concept_id": c, "component": r} for c, r in comp_map.items()],
+        schemas.COMPONENTS,
+    )
+    return _attach_canonical(mentions, comp)
 
 
 #: driver-side union-find refuses edge lists past this bound (an ontology
@@ -180,47 +189,41 @@ def canonicalize(
 
     The synonym graph is ontology-sized (10^4–10^6 nodes — tiny next to the
     10^12-turn corpus), so by default the union-find runs **driver-side**
-    (one collect of the pre-aggregated edge list, microseconds of CPU) and
-    ships back as a broadcast map — zero extra Spark jobs on the corpus
-    path.  ``driver_side=False`` switches to the distributed min-label
-    propagation (``connected_components``) for graphs that genuinely exceed
-    driver memory."""
+    and ships back as a broadcast map.  With no ``extra_edges`` it reads
+    the dictionary's driver rows (``collect_dictionary``: free for a
+    ``build_dictionary_df`` frame) and runs the same star-edge DSU as the
+    fused plan (``components_from_rows``) — no Spark job over the
+    dictionary.  ``extra_edges`` are a Spark frame, so they go through
+    ``synonym_edges`` and one bounded collect of the edge list
+    (``MAX_DRIVER_EDGES``).  ``driver_side=False`` switches to the
+    distributed min-label propagation (``connected_components``) for
+    graphs that genuinely exceed driver memory."""
+    if driver_side and extra_edges is None:
+        return canonicalize_with_map(
+            mentions, components_from_rows(collect_dictionary(dictionary))
+        )
     edges = synonym_edges(dictionary)
     if extra_edges is not None:
         edges = edges.unionByName(extra_edges.select("src", "dst"))
-    if driver_side:
-        # the driver-side contract is ONTOLOGY-sized edge lists; a caller
-        # feeding corpus-derived extra_edges would silently collect the
-        # corpus onto the driver.  Make the contract explicit: refuse past
-        # a bound and direct to the distributed path.
-        edge_rows = edges.limit(MAX_DRIVER_EDGES + 1).collect()
-        if len(edge_rows) > MAX_DRIVER_EDGES:
-            raise ValueError(
-                f"canonicalize(driver_side=True) saw more than "
-                f"{MAX_DRIVER_EDGES:,} synonym edges — this is no longer "
-                "ontology-sized; pass driver_side=False to run the "
-                "distributed connected_components instead"
-            )
-        comp_map = _dsu_components(
-            [(r["src"], r["dst"]) for r in edge_rows]
+    if not driver_side:
+        return _attach_canonical(
+            mentions,
+            connected_components(edges).withColumnRenamed("node", "concept_id"),
         )
-        spark = mentions.sparkSession
-        if comp_map:
-            comp = spark.createDataFrame(
-                list(comp_map.items()), "concept_id string, component string"
-            )
-        else:
-            comp = spark.createDataFrame(
-                [], "concept_id string, component string"
-            )
-    else:
-        comp = connected_components(edges).withColumnRenamed(
-            "node", "concept_id"
+    # the driver-side contract is ONTOLOGY-sized edge lists; a caller
+    # feeding corpus-derived extra_edges would silently collect the
+    # corpus onto the driver.  Make the contract explicit: refuse past
+    # a bound and direct to the distributed path.
+    edge_rows = edges.limit(MAX_DRIVER_EDGES + 1).collect()
+    if len(edge_rows) > MAX_DRIVER_EDGES:
+        raise ValueError(
+            f"canonicalize(driver_side=True) saw more than "
+            f"{MAX_DRIVER_EDGES:,} synonym edges — this is no longer "
+            "ontology-sized; pass driver_side=False to run the "
+            "distributed connected_components instead"
         )
-    return (
-        mentions.join(F.broadcast(comp), "concept_id", "left")
-        .withColumn("canonical_id", F.coalesce("component", "concept_id"))
-        .drop("component")
+    return canonicalize_with_map(
+        mentions, _dsu_components([(r["src"], r["dst"]) for r in edge_rows])
     )
 
 

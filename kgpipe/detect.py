@@ -44,7 +44,10 @@ def build_dictionary_df(
     for ontology, path in sorted(obo_paths.items()):
         cfg = (configs or {}).get(ontology) or config_for(ontology)
         all_rows.extend(dictionary_rows(parse_ontology(path), ontology, cfg))
-    df = spark.createDataFrame(all_rows, schema=schemas.DICTIONARY)
+    # an Arrow-built LocalRelation: Spark-side readers of the dictionary
+    # (Mayla's label map, distributed canonicalization) run in the JVM, not
+    # in Python worker tasks that would unpickle a Python RDD
+    df = schemas.local_frame(spark, all_rows, schemas.DICTIONARY)
     # the rows already live on the driver — let collect_dictionary skip the
     # driver→executor→driver round trip (a fixed seconds-scale job that
     # erodes scaling efficiency; parquet-sourced dictionaries still collect)

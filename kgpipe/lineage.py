@@ -25,6 +25,7 @@ from __future__ import annotations
 import datetime as dt
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schemas
@@ -42,11 +43,22 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("partition_id", bucket_col(n_buckets))
 
 
+#: read errors that mean "no lineage rows committed yet": the path does not
+#: exist (first run), or it holds no data file (a first append that crashed
+#: leaves only its hidden ``_temporary`` dir)
+_NO_LINEAGE = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
+    """The lineage table at *path*, or an empty one when none was committed.
+    Any other read failure (a corrupt or foreign file in the table) raises:
+    treating it as "no lineage" would silently redo every bucket."""
     try:
         return spark.read.parquet(path)
-    except Exception:
-        return spark.createDataFrame([], schema=schemas.LINEAGE)
+    except AnalysisException as e:
+        if e.getCondition() not in _NO_LINEAGE:
+            raise
+        return schemas.local_frame(spark, [], schemas.LINEAGE)
 
 
 def complete_buckets(lineage: DataFrame, run_key: str) -> DataFrame:

@@ -7,7 +7,9 @@ ts:timestamp``.
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TRANSCRIPTS = T.StructType(
     [
@@ -65,6 +67,14 @@ TRIPLES = T.StructType(
     ]
 )
 
+#: concept → component representative (canon's broadcast side)
+COMPONENTS = T.StructType(
+    [
+        T.StructField("concept_id", T.StringType(), False),
+        T.StructField("component", T.StringType(), False),
+    ]
+)
+
 LINEAGE = T.StructType(
     [
         T.StructField("run_key", T.StringType(), False),
@@ -89,3 +99,20 @@ EVAL = T.StructType(
         T.StructField("end", T.IntegerType(), True),
     ]
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: list[dict], schema: T.StructType
+) -> DataFrame:
+    """DataFrame over driver-side *rows*, built through a pyarrow Table.
+
+    Spark turns the Arrow table into a ``LocalRelation`` held by the JVM,
+    so no Python worker ever reads the frame.  ``createDataFrame(list)``
+    would instead store a pickled Python RDD that every consuming stage
+    unpickles in Python worker tasks, each with a fixed per-task cost.
+    The pyarrow route has no silent fallback (the pandas route drops to
+    the pickled path when Arrow conversion fails): a value that does not
+    fit *schema*, e.g. a None in a non-nullable column, raises.  Pass
+    timestamps timezone-aware: pyarrow reads a naive one as UTC."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -9,8 +9,31 @@ to be overridden via ``spark-submit --conf`` on a real cluster.
 from __future__ import annotations
 
 import os
+from typing import Mapping
 
 from pyspark.sql import SparkSession
+
+
+def available_cpus() -> int:
+    """CPUs this process may run on: its affinity mask (which a cpuset
+    limit narrows), not the machine's core count."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def default_cpus(env: Mapping[str, str], available: int) -> int:
+    """Local-mode core and shuffle-partition count: ``SPARK_GRAFT_CPUS``
+    when set, else the *available* CPUs.  Each Python task has a fixed
+    worker cost, so more partitions than cores only adds tasks."""
+    raw = env.get("SPARK_GRAFT_CPUS")
+    if not raw:
+        return available
+    if not raw.strip().isdigit() or int(raw) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+        )
+    return int(raw)
 
 
 def get_spark(
@@ -18,9 +41,9 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus(os.environ, available_cpus())
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
+    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -115,3 +115,66 @@ def test_rewrite_triples(spark):
     assert sorted(got) == sorted([
         ("x", "p", "x", 7), ("x", "p", "x", 8), ("a", "q", "x", 9),
         ("x", "p", "x", 10)])
+
+
+def _all_concept_mentions(spark, dictionary):
+    """One mention per dictionary concept, plus one the dictionary lacks."""
+    from kgpipe import schemas
+
+    ids = sorted({r.concept_id for r in
+                  dictionary.select("concept_id").distinct().collect()})
+    rows = [{"conv_id": "c", "turn_idx": i, "ontology": "O",
+             "concept_id": cid, "begin": 0, "end": 1, "covered_text": "x",
+             "error": None} for i, cid in enumerate(ids + ["ZZ:absent"])]
+    return schemas.local_frame(spark, rows, schemas.MENTIONS)
+
+
+def _canon_pairs(df):
+    return {(r.concept_id, r.canonical_id) for r in df.collect()}
+
+
+def _assert_routes_agree(spark, dictionary):
+    """Driver rows (the default) == synonym_edges + driver DSU (reached
+    through an empty extra_edges frame) == distributed components."""
+    mentions = _all_concept_mentions(spark, dictionary)
+    no_edges = spark.createDataFrame([], "src string, dst string")
+    rows_route = _canon_pairs(canonicalize(mentions, dictionary))
+    edges_route = _canon_pairs(
+        canonicalize(mentions, dictionary, extra_edges=no_edges))
+    distributed = _canon_pairs(
+        canonicalize(mentions, dictionary, driver_side=False))
+    assert rows_route == edges_route == distributed
+    return rows_route
+
+
+def test_canonicalize_routes_agree_on_fixture_ontologies(spark):
+    from conftest import MINI_OBO
+    from kgpipe.detect import build_dictionary_df
+
+    owl = MINI_OBO.replace("mini.obo", "mini.owl")
+    for paths in ({"SYN": MINI_OBO}, {"CL": owl}, {"SYN": MINI_OBO, "CL": owl}):
+        got = _assert_routes_agree(spark, build_dictionary_df(spark, paths))
+        assert ("ZZ:absent", "ZZ:absent") in got
+    got = _assert_routes_agree(
+        spark, build_dictionary_df(spark, {"SYN": MINI_OBO}))
+    assert ("SYN:0000002", "SYN:0000001") in got
+
+
+def test_canonicalize_routes_agree_on_chained_shared_synonyms(spark):
+    """D~C share "x", C~B share "y", B~A share "z": one component through a
+    chain no single synonym group spans; E~F form a second one; G is
+    alone.  The frame is built directly, so the driver-rows route collects
+    it (no cached driver rows)."""
+    from kgpipe import schemas
+
+    links = [("O:D", "x"), ("O:C", "x"), ("O:C", "y"), ("O:B", "y"),
+             ("O:B", "z"), ("O:A", "z"), ("O:F", "w"), ("O:E", "w"),
+             ("O:G", "solo"), ("O:G", ""), ("O:A", None)]
+    dictionary = schemas.local_frame(spark, [
+        {"ontology": "O", "concept_id": c, "canonical": c, "variant": v,
+         "is_official": True, "variant_norm": v} for c, v in links
+    ], schemas.DICTIONARY)
+    got = _assert_routes_agree(spark, dictionary)
+    assert got == {("O:A", "O:A"), ("O:B", "O:A"), ("O:C", "O:A"),
+                   ("O:D", "O:A"), ("O:E", "O:E"), ("O:F", "O:E"),
+                   ("O:G", "O:G"), ("ZZ:absent", "ZZ:absent")}

@@ -56,6 +56,33 @@ def _fake_pipeline(tdf):
     return mentions, triples
 
 
+def test_read_lineage_missing_or_empty_table_is_no_lineage(spark, tmp_path):
+    from kgpipe import schemas
+
+    missing = read_lineage(spark, str(tmp_path / "missing"))
+    # a first append that crashed leaves only its hidden _temporary dir
+    (tmp_path / "crashed" / "_temporary").mkdir(parents=True)
+    crashed = read_lineage(spark, str(tmp_path / "crashed"))
+    for df in (missing, crashed):
+        assert df.schema == schemas.LINEAGE and df.count() == 0
+
+
+def test_read_lineage_corrupt_table_raises(spark, tmp_path):
+    """A lineage table that cannot be read is an error, not "no lineage"
+    (which would silently redo every bucket)."""
+    import pytest
+
+    lin = tmp_path / "lineage"
+    lin.mkdir()
+    (lin / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        read_lineage(spark, str(lin))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_with_lineage(spark, _transcripts(spark, 4), _fake_pipeline,
+                         RUN_KEY, str(lin), str(tmp_path / "out"),
+                         n_buckets=4)
+
+
 def test_outstanding_anti_join(spark, tmp_path):
     tdf = with_bucket(_transcripts(spark), n_buckets=8)
     lineage = spark.createDataFrame(
