@@ -57,15 +57,26 @@ def _make_transcripts(spark, n_convs: int):
     return tdf, len(rows)
 
 
+def _dictionary_source() -> str:
+    """cl-basic.obo, or the 15-term test ontology when the reference tree
+    is absent; every result line names the one it used."""
+    if os.path.exists(CL_OBO):
+        return CL_OBO
+    return os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "tests", "fixtures", "mini.obo")
+
+
 def _dictionary(spark):
     from kgpipe.detect import build_dictionary_df
 
-    if os.path.exists(CL_OBO):
-        return build_dictionary_df(spark, {"CL": CL_OBO})
-    # fall back to the test mini ontology if the reference tree is absent
-    mini = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "tests", "fixtures", "mini.obo")
-    return build_dictionary_df(spark, {"CL": mini})
+    return build_dictionary_df(spark, {"CL": _dictionary_source()})
+
+
+def _dictionary_stamp(dictionary) -> dict:
+    from kgpipe.detect import collect_dictionary
+
+    return {"dictionary_source": _dictionary_source(),
+            "dictionary_variants": len(collect_dictionary(dictionary))}
 
 
 def kg_e2e(spark, tdf, dictionary, out_dir: str) -> int:
@@ -198,6 +209,7 @@ def run_default(reps: int | None = None) -> None:
         "reps": reps,
         "sf": _sf_of(SF_DIR),
         "n_turns": n_turns_df,
+        **_dictionary_stamp(d),
         **extras,
     }))
     spark.stop()
@@ -238,6 +250,7 @@ def run_scaling() -> None:
         ).repartition(hi * 4, "conv_id").cache()
         tdf.count()
         d = _dictionary(spark)
+        stamp.update(_dictionary_stamp(d))
         # warm the Python workers / broadcast path outside the timed window
         detect_mentions(tdf.limit(64), d).count()
         fused = os.environ.get("KGPIPE_SCALE_FUSED", "1") == "1"
@@ -258,6 +271,7 @@ def run_scaling() -> None:
     # report the median pairwise efficiency across rounds
     reps = int(os.environ.get("KGPIPE_SCALE_REPS", "3"))
     n_turns = len(data)
+    stamp: dict = {}
     rounds = []
     for _ in range(reps):
         t_lo = one_run(lo)
@@ -287,6 +301,7 @@ def run_scaling() -> None:
         "rounds": rounds,
         f"local{lo}": results[lo],
         f"local{hi}": results[hi],
+        **stamp,
     }))
 
 

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, functions as F
 from .canon import components_from_rows
 from .detect import build_tries, collect_dictionary
 from .disambig import mayla_keep_py
-from .trie import pretokenize
+from .trie import TurnScanner, is_null_text
 from .normalize import MatchConfig
 from .triples import (
     CONV_NS,
@@ -265,7 +265,7 @@ def fused_conv_triples(
     bc = spark.sparkContext.broadcast((tries, comp_map, mayla_cfg))
     block_size = max_turns_per_group
 
-    def _process_conv(conv_id, block, turns, emit, tries_l, comp,
+    def _process_conv(conv_id, block, turns, emit, scanner, comp,
                       mcfg) -> None:
         """One conversation (or block): *turns* is ``[(ti, text, ghost)]``
         already in turn order (the partition is sorted); *emit* appends into
@@ -279,12 +279,12 @@ def fused_conv_triples(
         triples and co-occurrence pairs (plus quarantined error rows).
         This also narrows the shuffle: role/tool never leave the scan side.
         """
-        # detect per turn (turn-relative offsets — the per-turn text
-        # equality invariant), dedupe identical (turn, concept, span).
-        # Ghost rows (next block's first `cooc_window` turns, replicated
-        # here as pair partners) produce NO denotes output.
+        # detect per turn through the batch's shared kernel (turn-relative
+        # offsets — the per-turn text equality invariant — and turn-local
+        # dedup of identical (concept, span) annotations).  Ghost rows
+        # (next block's first `cooc_window` turns, replicated here as pair
+        # partners) produce NO denotes output.
         mentions: list[tuple[int, str, int, int, str, bool]] = []
-        seen: set = set()
         # conversation-scope Mayla frequency text: the group's turns
         # joined in (turn_idx, text) order — identical to the staged
         # mayla_filter(freq_scope='conversation') aggregate when the group
@@ -298,29 +298,19 @@ def fused_conv_triples(
             conv_text = "\n".join(
                 t for _, t, _ in sorted(
                     (ti, text, g) for ti, text, g in turns
-                    if not g and text is not None
-                    and not (isinstance(text, float) and pd.isna(text))
+                    if not g and not is_null_text(text)
                 )
             )
         for ti, text, ghost in turns:
-            if text is None or (isinstance(text, float) and pd.isna(text)):
-                continue
-            pretok = pretokenize(text) if len(tries_l) > 1 else None
-            for trie in tries_l.values():
-                for ont, cid, b, e, cov in trie.scan_text(text, pretok):
-                    key = (ti, cid, b, e)
-                    if key not in seen:
-                        seen.add(key)
-                        # Mayla after turn-local dedup, before TF
-                        # disambiguation — the staged chain's order
-                        # (pipeline.build_mentions)
-                        if mcfg is not None and not mayla_keep_py(
-                            cov,
-                            conv_text if conv_text is not None else text,
-                            ont, mcfg[2].get(cid), mcfg[0], mcfg[1],
-                        ):
-                            continue
-                        mentions.append((ti, cid, b, e, cov, ghost))
+            for ont, cid, b, e, cov in scanner.scan(text):
+                # Mayla after turn-local dedup, before TF disambiguation —
+                # the staged chain's order (pipeline.build_mentions)
+                if mcfg is not None and not mayla_keep_py(
+                    cov, conv_text if conv_text is not None else text,
+                    ont, mcfg[2].get(cid), mcfg[0], mcfg[1],
+                ):
+                    continue
+                mentions.append((ti, cid, b, e, cov, ghost))
 
         # conversation-local TF disambiguation: for span-ambiguous mentions
         # keep the concept with the highest conv-level frequency, ties to
@@ -408,7 +398,7 @@ def fused_conv_triples(
             conv_id, block = key
             try:
                 _process_conv(conv_id, int(block), turns, emit,
-                              tries_l, comp, mcfg)
+                              scanner, comp, mcfg)
             except Exception as exc:
                 if not quarantine_errors:
                     raise
@@ -424,6 +414,8 @@ def fused_conv_triples(
             n = len(pdf)
             if n == 0:
                 continue
+            # one kernel (so one normalizer memo) per Arrow batch
+            scanner = TurnScanner(tries_l)
             out = {k: [] for k in _OUT_COLS}
             emit = make_emit(out)
             conv_a = pdf["conv_id"].to_numpy()

@@ -11,8 +11,10 @@ hub entities, connectivity fan-out) run in the same job as construction.
 Every op except ``pagerank`` is an integer-valued aggregation/equi-join —
 no floats, so each is DuckDB-oracle hashable with no driver-side
 collection.  ``pagerank`` is float-valued and iterative (one scalar
-dangling-mass aggregate per round), validated by pytest against a dense
-power-iteration reference instead.
+dangling-mass aggregate per round); it is oracle-hashed too, at a fixed 3
+iterations with ranks rounded to 1e-6 (the oracle unrolls the same
+updates as SQL), and pytest also checks it against a dense
+power-iteration reference.
 """
 
 from __future__ import annotations

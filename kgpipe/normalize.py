@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from typing import Callable, Optional
 
 # ---------------------------------------------------------------------------
 # Tokenizer
@@ -434,6 +435,35 @@ class MatchConfig:
 
     def is_stopword(self, tok: str) -> bool:
         return self.stopwords == STOP_PUBMED and tok.lower() in PUBMED_STOPWORDS
+
+    def normalizer(self) -> Callable[[str], Optional[str]]:
+        """A memoized ``raw token → normalized token`` callable, ``None``
+        for a stopword: ``is_stopword`` and ``normalize_token`` run once
+        per distinct token.  The memo lives exactly as long as the
+        returned callable — the scan kernel makes one per Arrow batch
+        (``trie.TurnScanner``), the dictionary build one per
+        ``obo.dictionary_rows`` call — so it is bounded by the batch and
+        never grows with the corpus (tool logs are mostly unique tokens;
+        a process-wide memo would grow the Python workers' memory)."""
+        return _NormMemo(self).__getitem__
+
+
+class _NormMemo(dict):
+    """``dict`` whose misses normalize: a hit is one C-level lookup."""
+
+    __slots__ = ("cfg",)
+
+    def __init__(self, cfg: MatchConfig):
+        super().__init__()
+        self.cfg = cfg
+
+    def __missing__(self, tok: str) -> Optional[str]:
+        cfg = self.cfg
+        out = None if cfg.is_stopword(tok) else cfg.normalize_token(tok)
+        if out == tok:
+            out = tok  # most tokens normalize to themselves: keep one copy
+        self[tok] = out
+        return out
 
 
 # Per-ontology optimized configurations. The reference pins per-ontology

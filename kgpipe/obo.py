@@ -240,6 +240,8 @@ def dictionary_rows(
     (the calibrated DOID precision gap in tests/test_parity.py)."""
     if modifier is None:
         modifier = MODIFIERS_BY_NAMESPACE.get(ontology)
+    # one memo for the whole build: variants share most of their tokens
+    norm = config.normalizer()
     rows: list[dict] = []
     for t in terms:
         if t.is_obsolete or not t.name:
@@ -267,9 +269,9 @@ def dictionary_rows(
                     "variant": text,
                     "is_official": scope == "EXACT",
                     "variant_norm": " ".join(
-                        config.normalize_token(tok)
-                        for tok in re.findall(r"[A-Za-z0-9]+", text)
-                        if not config.is_stopword(tok)
+                        tok for tok in
+                        map(norm, re.findall(r"[A-Za-z0-9]+", text))
+                        if tok is not None
                     ),
                 }
             )

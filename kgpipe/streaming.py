@@ -23,7 +23,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schemas
-from .trie import pretokenize as _pretokenize
+from .trie import TurnScanner
 
 
 def stream_transcripts(spark: SparkSession, path: str) -> DataFrame:
@@ -56,6 +56,7 @@ def stream_detect(
     def scan(batches):
         tries_local = bc.value
         for pdf in batches:
+            scanner = TurnScanner(tries_local)  # same kernel as batch detect
             out = {
                 "conv_id": [], "turn_idx": [], "ontology": [], "concept_id": [],
                 "begin": [], "end": [], "covered_text": [], "error": [],
@@ -63,24 +64,15 @@ def stream_detect(
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["text"]
             ):
-                if text is None:
-                    continue
-                seen = set()  # turn-local dedup, same as batch detect
-                pretok = (_pretokenize(text)
-                          if len(tries_local) > 1 else None)
-                for trie in tries_local.values():
-                    for ont, cid, b, e, cov in trie.scan_text(text, pretok):
-                        if (cid, b, e) in seen:
-                            continue
-                        seen.add((cid, b, e))
-                        out["conv_id"].append(conv_id)
-                        out["turn_idx"].append(int(turn_idx))
-                        out["ontology"].append(ont)
-                        out["concept_id"].append(cid)
-                        out["begin"].append(b)
-                        out["end"].append(e)
-                        out["covered_text"].append(cov)
-                        out["error"].append(None)
+                for ont, cid, b, e, cov in scanner.scan(text):
+                    out["conv_id"].append(conv_id)
+                    out["turn_idx"].append(int(turn_idx))
+                    out["ontology"].append(ont)
+                    out["concept_id"].append(cid)
+                    out["begin"].append(b)
+                    out["end"].append(e)
+                    out["covered_text"].append(cov)
+                    out["error"].append(None)
             yield pd.DataFrame(out)
 
     stream = stream_transcripts(spark, input_path)
@@ -163,7 +155,7 @@ def stream_conv_pairs(
             state.remove()
             yield pd.DataFrame(_EMPTY)
             return
-        tries_local = bc.value
+        scanner = TurnScanner(bc.value)
         if state.exists:
             tis, cid_strs = state.get
             buffer = [(int(t), set(s.split(",")) if s else set())
@@ -179,12 +171,7 @@ def stream_conv_pairs(
             batch = batch.sort_values("turn_idx")
             for turn_idx, text in zip(batch["turn_idx"], batch["text"]):
                 ti = int(turn_idx)
-                concepts: set = set()
-                if text is not None and not (isinstance(text, float)
-                                             and pd.isna(text)):
-                    for trie in tries_local.values():
-                        for _, cid, _, _, _ in trie.scan_text(text):
-                            concepts.add(cid)
+                concepts = {cid for _, cid, _, _, _ in scanner.scan(text)}
                 # pair the new turn against the buffered window (which,
                 # after this batch's earlier turns were appended, also
                 # covers new-vs-new pairs)
@@ -297,27 +284,19 @@ def stream_triples(
     def scan(batches):
         tries_local = bc.value
         for pdf in batches:
+            scanner = TurnScanner(tries_local)
             out = {"conv_id": [], "turn_idx": [], "concept_id": [],
                    "begin": [], "end": [], "covered_text": []}
             for conv_id, turn_idx, text in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["text"]
             ):
-                if text is None:
-                    continue
-                seen = set()
-                pretok = (_pretokenize(text)
-                          if len(tries_local) > 1 else None)
-                for trie in tries_local.values():
-                    for _, cid, b, e, cov in trie.scan_text(text, pretok):
-                        if (cid, b, e) in seen:
-                            continue
-                        seen.add((cid, b, e))
-                        out["conv_id"].append(conv_id)
-                        out["turn_idx"].append(int(turn_idx))
-                        out["concept_id"].append(cid)
-                        out["begin"].append(b)
-                        out["end"].append(e)
-                        out["covered_text"].append(cov)
+                for _, cid, b, e, cov in scanner.scan(text):
+                    out["conv_id"].append(conv_id)
+                    out["turn_idx"].append(int(turn_idx))
+                    out["concept_id"].append(cid)
+                    out["begin"].append(b)
+                    out["end"].append(e)
+                    out["covered_text"].append(cov)
             yield pd.DataFrame(out)
 
     stream = stream_transcripts(spark, input_path)

@@ -20,6 +20,14 @@ Search semantics reproduce the SearchStrategy knob
 OrderIndependentLookup:ON (used by the PR=478 / NCBI_TAXON=535 optimized
 settings) is a sorted-token-key index: multi-token variants additionally
 indexed under the sorted token sequence.
+
+``TurnScanner`` is the per-turn kernel that the staged, fused and
+streaming plans all call.  Normalization is memoized there: the scanner
+holds one ``MatchConfig.normalizer()`` per distinct config, and each plan
+makes one scanner per Arrow batch, so each distinct raw token is
+normalized once per batch.  The memo dies with the batch; it is not
+process-wide because agent tool logs are mostly unique tokens, and a memo
+that outlived its batch would grow the Python workers' memory.
 """
 
 from __future__ import annotations
@@ -95,7 +103,7 @@ class DictionaryTrie:
     # ------------------------------------------------------------------
 
     def scan_text(
-        self, text: str, pretok=None,
+        self, text: str, pretok=None, norm=None,
     ) -> list[tuple[str, str, int, int, str]]:
         """Scan *text* and return mentions
         ``[(ontology, concept_id, begin, end, covered_text)]`` with char
@@ -108,19 +116,26 @@ class DictionaryTrie:
         multi-ontology scan (the production shape: CHEBI+GO+PR+CL+TAXON
         tries over the same turn) tokenizes each turn once instead of once
         per trie; per-config stopword filtering and normalization still
-        happen here."""
+        happen here.
+
+        ``norm`` — optional ``self.config.normalizer()`` to share across
+        calls (``TurnScanner`` passes one per Arrow batch); without it the
+        memo lives for this call only."""
         out: list[tuple[str, str, int, int, str]] = []
         cfg = self.config
         if pretok is None:
             pretok = pretokenize(text)
+        if norm is None:
+            norm = cfg.normalizer()
         for cb, ce, raw in pretok:
             toks: list[str] = []
             begins: list[int] = []
             ends: list[int] = []
             for tok, b, e in raw:
-                if cfg.is_stopword(tok):
+                t = norm(tok)
+                if t is None:  # stopword
                     continue
-                toks.append(cfg.normalize_token(tok))
+                toks.append(t)
                 begins.append(cb + b)
                 ends.append(cb + e)
             if not toks:
@@ -240,3 +255,47 @@ class DictionaryTrie:
                 i = i + 1 if overlap else last + 1
             else:
                 i += 1
+
+
+# ----------------------------------------------------------------------
+# the per-turn scan kernel
+# ----------------------------------------------------------------------
+
+def is_null_text(text) -> bool:
+    """None or float NaN (a missing value in a float-typed pandas column):
+    a turn with no text, which yields no mentions in every plan."""
+    return text is None or (isinstance(text, float) and text != text)
+
+
+class TurnScanner:
+    """The per-turn scan shared by the staged, fused and streaming plans:
+    pretokenize once, scan every trie with its config's normalizer, and
+    drop identical ``(concept_id, begin, end)`` annotations turn-locally
+    (the ``DuplicateAnnotationRemovalFilter_AE`` analogue,
+    ``EntityFinder.java:104``; first match in scan order wins).
+
+    Make one per Arrow batch: each distinct config gets one
+    ``MatchConfig.normalizer()``, whose memo then lives for the batch.
+    Errors propagate; each caller quarantines at its own grain."""
+
+    __slots__ = ("_scans",)
+
+    def __init__(self, tries: dict[str, DictionaryTrie]):
+        norms = {t.config: t.config.normalizer() for t in tries.values()}
+        self._scans = [(t, norms[t.config]) for t in tries.values()]
+
+    def scan(self, text) -> list[tuple[str, str, int, int, str]]:
+        """Mentions ``[(ontology, concept_id, begin, end, covered_text)]``
+        of one turn; none for null text."""
+        if is_null_text(text):
+            return []
+        pretok = pretokenize(text)
+        out: list[tuple[str, str, int, int, str]] = []
+        seen: set = set()
+        for trie, norm in self._scans:
+            for m in trie.scan_text(text, pretok, norm):
+                key = (m[1], m[2], m[3])
+                if key not in seen:
+                    seen.add(key)
+                    out.append(m)
+        return out

@@ -14,6 +14,7 @@ Vocabulary (public): RDF/OA/DCTERMS plus OBO PURLs for concepts.
 
 from __future__ import annotations
 
+import re
 from typing import Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -616,7 +617,8 @@ def anaphora_links(
     O(turns^2); one window (keyed on the pronoun turn) picks the top-1.
     """
     bw = int(lookback) + 1
-    pat = "(^| )(" + "|".join(pronouns) + ")( |$)"
+    # pronouns are literal tokens: escape them, or "it." would match "its"
+    pat = "(^| )(" + "|".join(map(re.escape, pronouns)) + ")( |$)"
     p = transcripts.filter(F.lower(F.col("text")).rlike(pat)).select(
         "conv_id",
         F.col("turn_idx").alias("t"),

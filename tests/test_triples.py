@@ -326,6 +326,27 @@ def test_anaphora_links(spark):
     assert len(got) == 2
 
 
+def test_anaphora_links_pronouns_are_literal(spark):
+    """A regex metacharacter in a pronoun is matched literally: "it." must
+    not match the "its" of a turn whose only candidate is "its"."""
+    from kgpipe.triples import anaphora_links
+
+    t = spark.createDataFrame(
+        [("c1", 0, "u", "spark is here", None, None),
+         ("c1", 1, "a", "its fine", None, None),
+         ("c2", 0, "u", "spark is here", None, None),
+         ("c2", 1, "a", "done with it.", None, None)],
+        T_SCHEMA)
+    m = spark.createDataFrame(
+        [("c1", 0, "T:0001", 0, 5, "spark"),
+         ("c2", 0, "T:0001", 0, 5, "spark")],
+        ["conv_id", "turn_idx", "concept_id", "begin", "end",
+         "covered_text"])
+    got = {(r["conv_id"], r["turn_idx"])
+           for r in anaphora_links(m, t, pronouns=("it.",)).collect()}
+    assert got == {("c2", 1)}
+
+
 def test_entity_profile(spark):
     from kgpipe.triples import entity_profile
     import pytest as _pt
